@@ -8,10 +8,20 @@ which is also what makes transactions cheap — START TRANSACTION simply
 snapshots the table dict, ROLLBACK restores it (optimistic, last-writer
 -wins; the reference's interactive isolation levels don't map 1:1 and
 this divergence is documented in README).
+
+Every mutation commits each table it changes through ``_commit``: one
+eager stats-cut checkpoint, so a write runs one Spark action per table
+and no table's lineage grows with the writes before it (INSERT, SET,
+REMOVE, DELETE alike). What a write reports rides that same action as
+an ``observe`` at the root of the committed plan — rows appended,
+distinct matched ids or endpoint pairs, duplicate probes — and
+``rows_affected`` is read from that observation: no write runs a
+separate count, isEmpty or limit(1) probe.
 """
 
 from __future__ import annotations
 
+from itertools import groupby
 from typing import Any
 
 from pyspark.sql import functions as F
@@ -72,9 +82,10 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
     labels+props (insert.rs:87-135 recipe), which makes identical-content
     inserts idempotent: a duplicate node/edge is skipped with a warning
     and rows_affected 0, the behavior pinned by the reference's
-    duplicate_insert_test.rs / duplicate_edge_warning_test.rs. Appends
-    build new DataFrames (unionByName with missing-column fill) — at
-    scale these become Delta appends; here copy-on-write frames."""
+    duplicate_insert_test.rs / duplicate_edge_warning_test.rs. Each
+    element appends one row with one ``_commit`` whose duplicate probe
+    is counted in the same pass; the first row of a new label or edge
+    type is registered as its table without any action."""
     params = params or {}
     spark = graph.spark
     n_affected = 0
@@ -96,21 +107,20 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
                 nid = _fit_id(graph.nodes[label], nid)
             node_ids.append(nid)
             node_labels.append(label)
-            row = {"_id": nid, **props}
+            new = _row_frame(spark, {"_id": nid, **props})
             if label in graph.nodes:
-                old = graph.nodes[label]
-                if old.filter(
-                    F.col("_id") == F.lit(nid)
-                ).limit(1).count() > 0:
+                table, seen = _commit(graph.nodes[label], added=new,
+                                      probe=F.col(ID) == F.lit(nid))
+                if seen["probe"]:
                     if warnings is not None:
                         warnings.append(
                             f"Duplicate node detected (content hash {nid}); "
                             "insert skipped"
                         )
                     continue
-                graph.nodes[label] = _union_fill(old, spark.createDataFrame([row]))
+                graph.nodes[label] = table
             else:
-                graph.add_nodes(label, spark.createDataFrame([row]), "_id")
+                graph.add_nodes(label, new, "_id")
             n_affected += 1
         # then edges
         for i, el in enumerate(elems[1::2]):
@@ -124,9 +134,12 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
                     etype, node_labels[src_i], node_labels[dst_i], props
                 )
             row = {"_src": node_ids[src_i], "_dst": node_ids[dst_i], **props}
+            new = _row_frame(spark, row)
             if etype in graph.edges:
                 et = graph.edges[etype]
-                if _row_exists(et.df, row):
+                table, seen = _commit(et.df, added=new,
+                                      probe=_content_match(et.df, row))
+                if seen["probe"]:
                     if warnings is not None:
                         warnings.append(
                             f"Duplicate edge detected "
@@ -134,10 +147,10 @@ def execute_insert(graph: PropertyGraph, stmt: InsertStmt,
                             f"({node_ids[dst_i]}); insert skipped"
                         )
                     continue
-                et.df = _union_fill(et.df, spark.createDataFrame([row]))
+                et.df = table
             else:
                 graph.add_edges(
-                    etype, spark.createDataFrame([row]), "_src", "_dst",
+                    etype, new, "_src", "_dst",
                     node_labels[src_i], node_labels[dst_i],
                 )
             n_affected += 1
@@ -155,20 +168,40 @@ def _fit_id(existing_df, nid: str):
     return int(nid[:15], 16)
 
 
-def _row_exists(df, row: dict) -> bool:
-    """Content-equality probe: a stored row matches iff every column
-    null-safe-equals the inserted value (columns absent from the insert
-    must be NULL — extra non-null props make a different edge). A value
-    whose Python type can't live in the column's Spark type (string hash
-    vs long endpoint column) means no duplicate is possible — comparing
-    would be an ANSI cast error, not a match."""
+def _row_frame(spark, row: dict):
+    """A one-row frame typed as ``createDataFrame([row])`` types it
+    (its column order, int -> bigint), built JVM-side as a literal
+    projection over a one-partition range. ``createDataFrame`` ships
+    the row through a Python worker and yields defaultParallelism
+    partitions, all but one empty, which every later append carried
+    along: appending one row to a checkpointed 40-row table took 317 ms
+    that way against 75 ms with the literal row (median, local[4]).
+    Values a literal does not carry as-is (dates, decimals, arrays,
+    ...) keep the createDataFrame path, on one partition."""
+    schema = spark._inferSchemaFromList([row])
+    if all(type(v) in (str, int, float, bool) for v in row.values()):
+        return spark.range(1, numPartitions=1).select(*[
+            F.lit(row[f.name]).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ])
+    return spark.createDataFrame([row], schema).coalesce(1)
+
+
+def _content_match(df, row: dict):
+    """Content-equality predicate over ``df``'s rows: a stored row
+    matches iff every column null-safe-equals the inserted value
+    (columns absent from the insert must be NULL — extra non-null props
+    make a different edge). None when no stored row can match: a value
+    whose Python type can't live in the column's Spark type (string
+    hash vs long endpoint column) — comparing would be an ANSI cast
+    error, not a match."""
     from pyspark.sql.types import BooleanType, NumericType, StringType
 
     # An insert carrying a property column the table has never seen can't
     # equal any stored row — its content hash differs even if every shared
     # column matches (value.rs content identity covers all properties).
     if set(row) - set(df.columns):
-        return False
+        return None
 
     types = {f.name: f.dataType for f in df.schema.fields}
     cond = None
@@ -185,25 +218,70 @@ def _row_exists(df, row: dict) -> bool:
                 else True
             )
             if not ok:
-                return False
+                return None
             cc = F.col(c).eqNullSafe(F.lit(v))
         cond = cc if cond is None else cond & cc
-    return df.filter(cond).limit(1).count() > 0
+    return cond
 
 
-def _union_fill(old, new):
-    """unionByName with schema union (new props become NULL on old rows),
-    LINEAGE-CUT: without the cut, n sequential mutations build an
-    n-deep union whose branches are the MUTATIONS' OWN PLANS (a
-    MATCH-INSERT appends its join subtree), so every later statement
-    re-executes all prior mutations and the non-CBO join-stats product
-    compounds per level — measured 11 single-edge inserts taking 430s
-    (~40s each, growing) before the cut, sub-second after. DML frames
-    are small by nature, so the eager checkpoint costs milliseconds
-    and keeps every mutation O(current data), not O(history)."""
+# Tag column of a commit plan: NULL on the table's own rows.
+_TAG = "__dml_tag"
+_ADDED, _TALLY = 1, 2
+
+
+def _commit(table, added=None, tally=None, probe=None):
+    """Materialize one table's new version in ONE Spark action.
+
+    ``table`` holds the rows that stay (None for a new table), ``added``
+    rows appended to them (unionByName with missing-column fill: new
+    props become NULL on old rows), ``tally`` a frame whose rows are
+    only counted (the distinct matched ids of SET/REMOVE/DELETE), and
+    ``probe`` a predicate counted over the ``table`` rows (a duplicate
+    probe). The three counts ride the checkpoint as one ``observe`` at
+    the ROOT of the plan, over a tag column: an observation inside a
+    join side is lost when AQE replaces a join that has an empty side by
+    an empty relation, one at the root never is. Tally rows are dropped
+    above the observation. Returns ``(committed frame, {"added",
+    "tally", "probe"})``.
+
+    The checkpoint cuts lineage and size stats (``_ck_cut_stats``):
+    uncut, n sequential mutations build an n-deep plan whose branches
+    are the mutations' own plans, so every later statement re-executes
+    all prior writes — 11 single-edge inserts took 430 s before inserts
+    were cut, and chained SETs on the 20-node test graph doubled per
+    statement before SET was (0.5 s for the 2nd, 12.8 s for the 12th).
+    Appends add partitions, so a committed table with more than
+    ``spark.sql.shuffle.partitions`` is coalesced back under it, which
+    needs no exchange.
+    """
+    from pyspark.sql import Observation
+
     from .operators.paths import _ck_cut_stats
 
-    return _ck_cut_stats(old.unionByName(new, allowMissingColumns=True))
+    tag = F.col(_TAG)
+    plan = None
+    for df, t in ((table, None), (added, _ADDED), (tally, _TALLY)):
+        if df is None:
+            continue
+        if t == _TALLY:
+            df = df.select(F.lit(t).alias(_TAG))
+        else:
+            df = df.withColumn(_TAG, F.lit(t).cast("int"))
+        plan = df if plan is None else plan.unionByName(
+            df, allowMissingColumns=True)
+    metrics = [F.count_if(tag == _ADDED).alias("added"),
+               F.count_if(tag == _TALLY).alias("tally")]
+    if probe is not None:
+        metrics.append(F.count_if(tag.isNull() & probe).alias("probe"))
+    obs = Observation()
+    plan = plan.observe(obs, *metrics)
+    if tally is not None:
+        plan = plan.filter(tag.isNull() | (tag == _ADDED))
+    ck = _ck_cut_stats(plan.drop(_TAG))
+    cap = int(ck.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if ck.rdd.getNumPartitions() > cap:
+        ck = ck.coalesce(cap)
+    return ck, {"probe": 0, **obs.get}
 
 
 def _compile_matches(graph: PropertyGraph, matches, params):
@@ -219,19 +297,22 @@ def _compile_matches(graph: PropertyGraph, matches, params):
 
 def execute_mutate(graph: PropertyGraph, stmt: MatchMutateStmt,
                    params: dict | None = None) -> int:
+    """SET/REMOVE items apply per run of consecutive items on one
+    variable: one commit of its label table per run. The MATCH frame is
+    compiled once, against the pre-statement graph."""
     params = params or {}
     qc, frame = _compile_matches(graph, stmt.matches, params)
 
     if stmt.action == "SET":
-        total = 0
-        for item in stmt.set_items:
-            total += _apply_set(graph, frame, item, params)
-        return total
+        return sum(
+            _apply_set(graph, frame, var, list(items), params)
+            for var, items in groupby(stmt.set_items, lambda it: it.var)
+        )
     if stmt.action == "REMOVE":
-        total = 0
-        for var, prop in stmt.remove_items:
-            total += _apply_remove(graph, frame, var, prop)
-        return total
+        return sum(
+            _apply_remove(graph, frame, var, [p for _, p in items])
+            for var, items in groupby(stmt.remove_items, lambda it: it[0])
+        )
     if stmt.action in ("DELETE", "DETACH_DELETE"):
         total = 0
         for var in stmt.delete_vars:
@@ -245,7 +326,8 @@ def execute_mutate(graph: PropertyGraph, stmt: MatchMutateStmt,
 def _apply_match_insert(graph: PropertyGraph, frame, patterns, params) -> int:
     """MATCH ... INSERT (a)-[:T {..}]->(b): connect matched nodes
     (match_insert.rs). Node elements must be bound match variables or
-    literal-only new nodes; edges append per distinct endpoint pair."""
+    literal-only new nodes; edges append per distinct endpoint pair,
+    counted by the observation on the commit, so the MATCH runs once."""
     total = 0
     for pat in patterns:
         elems = pat.elements
@@ -266,12 +348,11 @@ def _apply_match_insert(graph: PropertyGraph, frame, patterns, params) -> int:
                 label = el.labels[0]
                 if label in graph.nodes:
                     nid = _fit_id(graph.nodes[label], nid)
-                row = {"_id": nid, **props}
-                new_df = graph.spark.createDataFrame([row])
+                new = _row_frame(graph.spark, {"_id": nid, **props})
                 if label in graph.nodes:
-                    graph.nodes[label] = _union_fill(graph.nodes[label], new_df)
+                    graph.nodes[label], _ = _commit(graph.nodes[label], added=new)
                 else:
-                    graph.add_nodes(label, new_df, "_id")
+                    graph.add_nodes(label, new, "_id")
                 id_exprs.append(F.lit(nid))
                 labels.append(label)
                 total += 1
@@ -286,13 +367,14 @@ def _apply_match_insert(graph: PropertyGraph, frame, patterns, params) -> int:
                 id_exprs[dst_i].alias(DST),
                 *[F.lit(v).alias(k) for k, v in props.items()],
             ).dropDuplicates([SRC, DST])
-            total += new_edges.count()
-            if etype in graph.edges:
-                et = graph.edges[etype]
-                et.df = _union_fill(et.df, new_edges)
+            et = graph.edges.get(etype)
+            table, seen = _commit(et.df if et else None, added=new_edges)
+            total += seen["added"]
+            if et:
+                et.df = table
             else:
                 graph.add_edges(
-                    etype, new_edges, SRC, DST, labels[src_i], labels[dst_i]
+                    etype, table, SRC, DST, labels[src_i], labels[dst_i]
                 )
     return total
 
@@ -304,55 +386,58 @@ def _binding(frame, var):
     return b
 
 
-def _apply_set(graph: PropertyGraph, frame, item, params) -> int:
-    b = _binding(frame, item.var)
+def _apply_set(graph: PropertyGraph, frame, var, items, params) -> int:
+    """One run of SET items on ``var``: one join of its label table with
+    the distinct matched ids and their new values, one commit. Each item
+    counts the distinct matched ids, as it did when items applied one by
+    one."""
+    b = _binding(frame, var)
     if b.kind != "node":
         raise DmlError("SET supports node properties (edge SET: planned)")
-    if item.label is not None:
+    if any(item.label is not None for item in items):
         raise DmlError("SET label is not supported yet")
     label = b.label
     if label is None:
         raise DmlError("SET target must have a known label")
     ec = ExprCompiler(frame, params)
+    vals = [f"__newval{i}" for i in range(len(items))]
     new_vals = (
         frame.df.select(
-            F.col(_ncol(item.var, ID)).alias("__tid"),
-            ec.compile(item.value).alias("__newval"),
+            F.col(_ncol(var, ID)).alias("__tid"),
+            *[ec.compile(item.value).alias(v) for item, v in zip(items, vals)],
         )
         .dropDuplicates(["__tid"])
     )
     nodes = graph.nodes[label]
-    joined = nodes.join(new_vals, nodes[ID] == F.col("__tid"), "left")
-    if item.prop in nodes.columns:
-        updated = joined.withColumn(
-            item.prop,
-            F.when(F.col("__tid").isNotNull(), F.col("__newval")).otherwise(
-                F.col(item.prop)
-            ),
-        )
-    else:
-        updated = joined.withColumn(
-            item.prop,
-            F.when(F.col("__tid").isNotNull(), F.col("__newval")),
-        )
-    graph.nodes[label] = updated.drop("__tid", "__newval")
-    return new_vals.count()
+    updated = nodes.join(new_vals, nodes[ID] == F.col("__tid"), "left")
+    hit = F.col("__tid").isNotNull()
+    for item, v in zip(items, vals):
+        new = F.when(hit, F.col(v))
+        if item.prop in updated.columns:
+            new = new.otherwise(F.col(item.prop))
+        updated = updated.withColumn(item.prop, new)
+    graph.nodes[label], seen = _commit(
+        updated.drop("__tid", *vals), tally=new_vals)
+    return seen["tally"] * len(items)
 
 
-def _apply_remove(graph: PropertyGraph, frame, var, prop) -> int:
+def _apply_remove(graph: PropertyGraph, frame, var, props) -> int:
     b = _binding(frame, var)
     if b.kind != "node" or b.label is None:
         raise DmlError("REMOVE supports labeled node properties")
     nodes = graph.nodes[b.label]
-    if prop not in nodes.columns:
+    props = [p for p in props if p in nodes.columns]
+    if not props:
         return 0
     ids = frame.df.select(F.col(_ncol(var, ID)).alias("__tid")).distinct()
-    joined = nodes.join(ids, nodes[ID] == F.col("__tid"), "left")
-    updated = joined.withColumn(
-        prop, F.when(F.col("__tid").isNotNull(), F.lit(None)).otherwise(F.col(prop))
-    )
-    graph.nodes[b.label] = updated.drop("__tid")
-    return ids.count()
+    updated = nodes.join(ids, nodes[ID] == F.col("__tid"), "left")
+    for prop in props:
+        updated = updated.withColumn(
+            prop,
+            F.when(F.col("__tid").isNotNull(), F.lit(None)).otherwise(F.col(prop)),
+        )
+    graph.nodes[b.label], seen = _commit(updated.drop("__tid"), tally=ids)
+    return seen["tally"] * len(props)
 
 
 def _apply_delete(graph: PropertyGraph, frame, var, detach: bool) -> int:
@@ -365,37 +450,39 @@ def _apply_delete(graph: PropertyGraph, frame, var, detach: bool) -> int:
         pairs = frame.df.select(
             F.col(_ncol(var, SRC)).alias("__s"), F.col(_ncol(var, DST)).alias("__d")
         ).distinct()
-        n = pairs.count()
-        et.df = et.df.join(
+        kept = et.df.join(
             pairs, (et.df[SRC] == F.col("__s")) & (et.df[DST] == F.col("__d")),
             "left_anti",
         )
-        return n
+        et.df, seen = _commit(kept, tally=pairs)
+        return seen["tally"]
     if b.label is None:
         raise DmlError("DELETE target must have a known label")
     ids = frame.df.select(F.col(_ncol(var, ID)).alias("__tid")).distinct()
-    n = ids.count()
     label = b.label
-    incident = []
+    # each edge type with an endpoint of this label: commit it without
+    # the incident edges; the edges it had (tally) minus the rows it
+    # keeps (probe) say whether any were incident
+    cut = {}
     for ename, et in graph.edges.items():
-        if et.src_label == label or et.dst_label == label:
-            cond_cols = []
-            if et.src_label == label:
-                cond_cols.append(SRC)
-            if et.dst_label == label:
-                cond_cols.append(DST)
-            for c in cond_cols:
-                cnt = et.df.join(ids, et.df[c] == F.col("__tid"), "left_semi")
-                if not cnt.isEmpty():
-                    incident.append((ename, c))
-    if incident and not detach:
+        sides = [c for c, end in ((SRC, et.src_label), (DST, et.dst_label))
+                 if end == label]
+        if not sides:
+            continue
+        kept = et.df
+        for c in sides:
+            kept = kept.join(ids, kept[c] == F.col("__tid"), "left_anti")
+        table, seen = _commit(kept, tally=et.df, probe=F.lit(True))
+        if seen["tally"] > seen["probe"]:
+            cut[ename] = table
+    if cut and not detach:
         raise DmlError(
             f"cannot DELETE {var}: incident edges exist "
-            f"({sorted(set(e for e, _ in incident))}); use DETACH DELETE"
+            f"({sorted(cut)}); use DETACH DELETE"
         )
-    for ename, c in incident:
-        et = graph.edges[ename]
-        et.df = et.df.join(ids, et.df[c] == F.col("__tid"), "left_anti")
+    for ename, table in cut.items():
+        graph.edges[ename].df = table
     nodes = graph.nodes[label]
-    graph.nodes[label] = nodes.join(ids, nodes[ID] == F.col("__tid"), "left_anti")
-    return n
+    graph.nodes[label], seen = _commit(
+        nodes.join(ids, nodes[ID] == F.col("__tid"), "left_anti"), tally=ids)
+    return seen["tally"]

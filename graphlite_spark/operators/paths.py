@@ -2195,7 +2195,6 @@ def _luby_mis_rounds(und: DataFrame, max_rounds: int,
 def is_bipartite(
     edges: DataFrame,
     nodes: DataFrame,
-    max_hops: int = 1000,
     max_iter: int = 30,
 ) -> DataFrame:
     """(comp, bipartite, n_nodes) — 2-colorability per connected
@@ -2219,8 +2218,7 @@ def is_bipartite(
     vs the old composition (CC then multi-source BFS from the
     representatives): BFS parity is DIAMETER-bound — ~45s on the
     sf0.1 event chains — while this form inherits CC's pointer
-    jumping, so rounds are O(log diameter). ``max_hops`` is retained
-    for signature compatibility and ignored (there is no BFS).
+    jumping, so rounds are O(log diameter).
     """
     id_col = nodes.columns[0]
     # materialize the edge frame once: it feeds every round's

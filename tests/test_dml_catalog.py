@@ -957,3 +957,201 @@ def test_call_katz_and_assortativity(db):
     assert sorted(kz.values()) == [1.0, 1.5, 1.75]
     r = db.execute("CALL gql.assortativity()").collect()[0]
     assert r.n_edges == 2 and r.assortativity is not None
+
+
+# -- one action per write ---------------------------------------------------
+
+
+def _chain_db(spark):
+    """The 20-node chain graph of the ``simple_db`` fixture with 19
+    chain edges, private to one test (the session fixture is shared)."""
+    from graphlite_spark import GraphLiteSpark, PropertyGraph
+
+    nodes = spark.createDataFrame(
+        [(i, f"node{i}", i * 10) for i in range(20)],
+        "id: long, name: string, value: long",
+    )
+    edges = spark.createDataFrame(
+        [(i, i + 1, float(i)) for i in range(19)],
+        "src: long, dst: long, weight: double",
+    )
+    g = PropertyGraph(spark, name="chain")
+    g.add_nodes("TestNode", nodes, "id")
+    g.add_edges("CONNECTS_TO", edges, "src", "dst", "TestNode", "TestNode")
+    db = GraphLiteSpark(spark)
+    db.register_graph(g)
+    return db
+
+
+def _execute_counting_jobs(spark, db, gql, group):
+    """db.execute(gql) -> (result, Spark jobs it ran), counted by job
+    group through the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, gql)
+    try:
+        r = db.execute(gql)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return r, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_chained_set_and_edge_delete_run_constant_jobs(spark):
+    # every mutation cuts lineage: the 12th chained SET (or edge DELETE)
+    # on one table runs the same jobs as the 2nd, instead of re-running
+    # the statements before it. The first statement reads the uncut
+    # fixture tables, so it is left out; AQE may submit one stage more
+    # or less depending on which stage finishes first, hence the spread
+    # of one job
+    db = _chain_db(spark)
+    set_jobs = []
+    for i in range(12):
+        r, jobs = _execute_counting_jobs(
+            spark, db,
+            f"MATCH (n:TestNode) WHERE n.id = {i} SET n.value = {1000 + i}",
+            f"chained-set-{i}")
+        assert r == {"status": "ok", "rows_affected": 1}
+        set_jobs.append(jobs)
+    assert max(set_jobs[1:]) - min(set_jobs[1:]) <= 1, set_jobs
+    plan = db.graph().nodes["TestNode"]._jdf.queryExecution().analyzed()
+    assert "Join" not in plan.toString(), plan.toString()
+    got = {r.id: r.value for r in db.query(
+        "MATCH (n:TestNode) RETURN n.id AS id, n.value AS value").collect()}
+    assert got == {i: 1000 + i if i < 12 else i * 10 for i in range(20)}
+
+    del_jobs = []
+    for i in range(12):
+        r, jobs = _execute_counting_jobs(
+            spark, db,
+            "MATCH (a:TestNode)-[e:CONNECTS_TO]->(b:TestNode) "
+            f"WHERE a.id = {i} DELETE e",
+            f"chained-delete-{i}")
+        assert r == {"status": "ok", "rows_affected": 1}
+        del_jobs.append(jobs)
+    assert max(del_jobs[1:]) - min(del_jobs[1:]) <= 1, del_jobs
+    plan = db.graph().edges["CONNECTS_TO"].df._jdf.queryExecution().analyzed()
+    assert "Join" not in plan.toString(), plan.toString()
+    left = db.query("MATCH (a:TestNode)-[e:CONNECTS_TO]->(b:TestNode) "
+                    "RETURN a.id AS s, b.id AS d").collect()
+    assert sorted((r.s, r.d) for r in left) == [(i, i + 1) for i in range(12, 19)]
+
+
+def test_rows_affected_and_warnings_per_write_kind(db):
+    from graphlite_spark.catalog import content_hash_id
+
+    ada = content_hash_id(["Person"], {"name": "Ada", "age": 36})
+    bob = content_hash_id(["Person"], {"name": "Bob", "age": 41})
+    cy = content_hash_id(["Person"], {"name": "Cy"})
+    ok = {"status": "ok"}
+    steps = [
+        ("INSERT (:Person {name: 'Ada', age: 36})",
+         {**ok, "rows_affected": 1}),
+        ("INSERT (:Person {name: 'Bob', age: 41})-[:KNOWS {since: 1}]->"
+         "(:Person {name: 'Cy'})", {**ok, "rows_affected": 3}),
+        # duplicate node
+        ("INSERT (:Person {name: 'Ada', age: 36})",
+         {**ok, "rows_affected": 0, "warnings": [
+             f"Duplicate node detected (content hash {ada}); insert skipped"]}),
+        # duplicate edge (and its two endpoint nodes)
+        ("INSERT (:Person {name: 'Bob', age: 41})-[:KNOWS {since: 1}]->"
+         "(:Person {name: 'Cy'})",
+         {**ok, "rows_affected": 0, "warnings": [
+             f"Duplicate node detected (content hash {bob}); insert skipped",
+             f"Duplicate node detected (content hash {cy}); insert skipped",
+             f"Duplicate edge detected ({bob})-[:KNOWS]->({cy}); "
+             "insert skipped"]}),
+        # a parallel edge: same endpoints, other props
+        ("INSERT (:Person {name: 'Bob', age: 41})-[:KNOWS {since: 2}]->"
+         "(:Person {name: 'Cy'})",
+         {**ok, "rows_affected": 1, "warnings": [
+             f"Duplicate node detected (content hash {bob}); insert skipped",
+             f"Duplicate node detected (content hash {cy}); insert skipped"]}),
+        ("MATCH (a:Person {name: 'Ada'}), (b:Person {name: 'Bob'}) "
+         "INSERT (a)-[:KNOWS {since: 3}]->(b)", {**ok, "rows_affected": 1}),
+        # two matched nodes x two items
+        ("MATCH (p:Person) WHERE p.age > 30 SET p.age = p.age + 1, "
+         "p.title = 'x'", {**ok, "rows_affected": 4}),
+        # a property the table lacks counts nothing
+        ("MATCH (p:Person {name: 'Ada'}) REMOVE p.title, p.nothing",
+         {**ok, "rows_affected": 1}),
+        # parallel edges delete as one endpoint pair
+        ("MATCH (a:Person {name: 'Bob'})-[k:KNOWS]->(b:Person) DELETE k",
+         {**ok, "rows_affected": 1}),
+        ("MATCH (p:Person {name: 'Ada'}) DETACH DELETE p",
+         {**ok, "rows_affected": 1}),
+    ]
+    for gql, want in steps:
+        assert db.execute(gql) == want, gql
+    got = db.query("MATCH (p:Person) RETURN p.name AS n, p.age AS a, "
+                   "p.title AS t ORDER BY n").collect()
+    assert [tuple(r) for r in got] == [("Bob", 42, "x"), ("Cy", None, None)]
+    assert db.query("MATCH (:Person)-[k:KNOWS]->(:Person) "
+                    "RETURN count(*) AS n").collect()[0].n == 0
+
+
+def test_rollback_restores_rows_after_checkpointed_writes(db):
+    def state():
+        g = db.graph()
+        return ({k: sorted(map(tuple, df.collect()))
+                 for k, df in g.nodes.items()},
+                {k: sorted(map(tuple, et.df.collect()))
+                 for k, et in g.edges.items()})
+
+    db.execute("INSERT (:Person {name: 'Ada', age: 36})-[:KNOWS]->"
+               "(:Person {name: 'Bob', age: 41})")
+    db.execute("INSERT (:Person {name: 'Cy', age: 7})")
+    before = state()
+    db.execute("START TRANSACTION")
+    db.execute("INSERT (:Person {name: 'Eve'})")
+    db.execute("MATCH (a:Person {name: 'Cy'}), (b:Person {name: 'Eve'}) "
+               "INSERT (a)-[:KNOWS]->(b)")
+    db.execute("MATCH (p:Person) SET p.age = 0")
+    db.execute("MATCH (p:Person {name: 'Bob'}) REMOVE p.age")
+    db.execute("MATCH (:Person)-[k:KNOWS]->(:Person {name: 'Bob'}) DELETE k")
+    db.execute("MATCH (p:Person {name: 'Cy'}) DETACH DELETE p")
+    assert state() != before
+    db.execute("ROLLBACK")
+    assert state() == before
+
+
+def test_appends_keep_partition_count_bounded(db, spark):
+    # each insert after the first is ONE Spark job (no duplicate probe,
+    # no Python worker for the row), and the appended table stays under
+    # spark.sql.shuffle.partitions however many rows were appended
+    for i in range(40):
+        r, jobs = _execute_counting_jobs(
+            spark, db, f"INSERT (:Tag {{tag_id: {i}, name: 't{i}'}})",
+            f"append-{i}")
+        assert r == {"status": "ok", "rows_affected": 1}
+        assert jobs == (0 if i == 0 else 1), (i, jobs)
+    tags = db.graph().nodes["Tag"]
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert tags.rdd.getNumPartitions() <= cap
+    assert dict(tags.dtypes) == {"_id": "string", "name": "string",
+                                 "tag_id": "bigint"}
+    assert sorted(r.tag_id for r in tags.collect()) == list(range(40))
+
+
+def test_inserted_row_keeps_create_dataframe_types(db):
+    # scalar values become JVM-side literals, other values (dates,
+    # arrays) go through createDataFrame; either way the stored columns
+    # are what createDataFrame([row]) infers, in its order, on one
+    # partition
+    import datetime
+
+    db.execute("INSERT (:V {s: 'x', i: 3, f: 1.5, b: true})")
+    db.execute("INSERT (:W {d: DATE('2020-01-02'), l: [1, 2]})")
+    v, w = db.graph().nodes["V"], db.graph().nodes["W"]
+    assert v.dtypes == [("_id", "string"), ("b", "boolean"), ("f", "double"),
+                        ("i", "bigint"), ("s", "string")]
+    assert w.dtypes == [("_id", "string"), ("d", "date"),
+                        ("l", "array<bigint>")]
+    assert v.rdd.getNumPartitions() == w.rdd.getNumPartitions() == 1
+    assert [tuple(r)[1:] for r in v.collect()] == [(True, 1.5, 3, "x")]
+    assert [tuple(r)[1:] for r in w.collect()] == [
+        (datetime.date(2020, 1, 2), [1, 2])]
+    # appending a date-valued row to a scalar-built table
+    db.execute("INSERT (:V {s: 'y', d: DATE('2021-03-04')})")
+    got = db.query("MATCH (n:V) RETURN n.s AS s, n.d AS d ORDER BY s").collect()
+    assert [tuple(r) for r in got] == [("x", None),
+                                       ("y", datetime.date(2021, 3, 4))]
